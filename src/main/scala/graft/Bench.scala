@@ -2,76 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** BASELINE.md's recorded warm-run total at the driver's config
-    * (local[32], sf0.1) — re-anchored round 7 from measured idle
-    * 223-query drives (183.6 / 167.3 s warm; a fixture-cold first
-    * drive reads ~236 s — the one-time join_cbo_reorder / join_bucketed
-    * / keep-list builds) plus the round-6 judge's independent idle
-    * 165.2 s at 220 queries. The prior 136 was the additive round-6b
-    * estimate and measured ~20% low, so the 1.5× contention flag only
-    * fired above ~204 s. The bench compares its own total against this
-    * and flags contention, because this VM's load spikes have produced
-    * 2-7x inflated artifacts (round-2 BENCH file); keep in sync with
-    * BASELINE.md after perf changes or query-set growth, or the flag
-    * loses its sensitivity. */
-  // round-7b: 165 (anchored at 238 ids) + 10.1 s measured in-bench cost
-  // of the 9 new ids (graph_jaccard 7.1 s dominates); the first 247-id
-  // drive read 198.8 s with one transient contention spike
-  // (pipeline_multimodal_set 12.6 s vs 0.9-3.4 s isolated)
-  // round-8: 175 + ~2.6 s summed warm cost of the 4 new ids
-  // (merge_into 0.75, sim_ivf_append 0.65, sql_delete/sql_update ~0.6
-  // each); clean 276/278-id drives read 178.2 / 189.4 s idle
-  // round-9: 178 + ~3.5 s summed in-bench cost of the 5 new ids
-  // (sim_ivf_refit 1.03, cdc_table_changes 1.17, merge_into_mor 0.83,
-  // stream_table_read 0.47, sql_delete_mor 0.20); the 290-id closing
-  // drives read 192.6 s fixture-cold / 168.5 s warm idle
-  // round-9 third wave: 181 + ~6 s for the 9 lake-scan ids (measured
-  // in-bench: join_runtime_prune 1.03, join_bucketed_spj 0.96,
-  // join_storage_partitioned 0.79, agg_pushdown_scan 0.75,
-  // scan_partitioned_prune 0.67, table_partitions 0.52,
-  // join_governed_broadcast 0.32, table_history 0.30, plus
-  // sink_partition_overwrite ~0.7 est — each seeds its own governed
-  // orders/customer copy, which is the bulk of its cost)
-  // round-10 continuation: +6 ids (join_hidden_spj 1.9, table_clone
-  // 1.3, sql_partition_evolve 0.9, stream_parquet_sink 0.8,
-  // table_refs 0.5, sql_alter_default 0.4 — summed ≈5.8 s warm at
-  // sf0.1) → 196 re-anchored additively to 202
-  // round-10 DDL-surface wave: +3 sub-second ids (generated/identity/
-  // check-constraint, summed 1.3 s warm) → 202 → 203
-  // round-11: +7 ids (sql_delete_dv 0.7, table_purge_dv 0.8,
-  // mv_incremental 1.5, sql_catalog_view 3.1 incl. the one-time
-  // extension-sibling session, sql_call_procedure 0.3,
-  // scan_metadata_cols 0.6, join_elim_rely 0.8 — summed 7.9 s in the
-  // round's sf0.1 drive) → 203 re-anchored additively to 211;
-  // +table_binpack (1.4-1.6 s warm) → 212
-  // round-12: +3 ids (table_log_replay 1.4-1.5 warm — 3 commits +
-  // a DV delete + the simulated-restart replay; mv_groupwise ~2.1 —
-  // 4 row-level DML commits + the touched-group recompute;
-  // txn_multi_table ~1.1 — two table seeds + the staged two-table
-  // commit; summed ≈4.6 s across two drives whose ambient spikes
-  // moved between runs) → 212 re-anchored additively to 217
-  // round-13: the first-thing idle re-drive of the 346-id set read
-  // 277.5 s fixture-cold / vs_baseline 1.28 / ZERO tripwires /
-  // flag=false (replacing the contended 975.7 s r12 artifact); +2 ids
-  // (cdc_replace_feed ~1.2 — REPLACE WHERE + the distributed
-  // manifest-diff feed; table_gc_orphans ~0.8 — seed + orphan sweep)
-  // → 217 re-anchored additively to 219
-  // round-14: +3 ids (txn_multi_rw 1.25 — fact+dim seeds + the DV
-  // bitmap pass + the two-table RW commit; table_sort_order 1.98 —
-  // three range-sorted appends + the bin-pack merge; sql_alter_widen
-  // 0.86 — seed + two checkpointing widens + wide append; measured in
-  // the 351.4 s close drive) + text_langid's profile rebuild
-  // (0.17 → 0.45) → 219 re-anchored additively to 223
-  // round-15: re-anchored from MEASURED near-idle drives of the
-  // 351-id tree, not additively (the r14 judge's ask: additive
-  // re-anchoring only ever adds NEW ids' costs and missed the real
-  // price round 14 put on EXISTING commit-heavy ids, so the 223
-  // anchor sat below the tree's clean floor and the contention flag
-  // fired on every honest drive). Evidence: the r14 judge's clean
-  // 0-tripwire drive read 346.1 s (load 0.32, canaries ~1.2-1.3x
-  // idle floor); this round's first drive read 431.9 s with an
-  // ambient burst confined to its 8-id alphabetical head
-  // (ambient-corrected ~358 s). Anchor = 340, so a clean drive reads
-  // vs_baseline ~ 1.0 and the 1.5x flag discriminates again.
+    * (local[32], sf0.1). The bench compares its own total against this
+    * and flags contention above [[ContentionRatio]] × the anchor; keep
+    * in sync with BASELINE.md after perf changes or query-set growth.
+    * The anchor's round-by-round history is in BASELINE.md. */
   private val BaselineWarmSec = 340.0
   private val ContentionRatio = 1.5
 

@@ -22,10 +22,10 @@ object GraftApi {
   // ---- text canonicalization & dedup -------------------------------
 
   /** Stage-0 canonicalization: lower → accent strip (codegen'd NFD fold)
-    * → whitespace collapse → trim. Run before ANY text hashing. */
+    * → whitespace collapse → trim — the query path's own (oracle-checked)
+    * normalizer. Run before ANY text hashing. */
   def normalizeText(text: Column): Column =
-    graft.functions.TextNormExprs.stripAccents(
-      regexp_replace(trim(lower(text)), "\\s+", " "))
+    graft.operators.TextOps.normText(text)
 
   /** URL canonicalization (the dedup_url core — run before URL-keyed
     * dedup/joins): lowercase scheme+host, strip default :443 port /

@@ -65,6 +65,37 @@ object AnalyticsOps extends QueryModule {
     s.read.schema(Fixtures.copurchaseSchema).parquet(dir)
   }
 
+  /** graph_bfs's exact single-task solve over every co-purchase edge
+    * (a, b), run by [[LocalSolve]]: (node, dist) for every node within
+    * 6 hops of the max-degree hub (ties → min id) — the same answer as
+    * the distributed frontier loop in the query. */
+  private def bfsFromHub(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val adj = scala.collection.mutable.HashMap
+      .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
+    val deg = scala.collection.mutable.HashMap.empty[Long, Long]
+    it.foreach { case (a, b) =>
+      adj.getOrElseUpdate(a, scala.collection.mutable
+        .ArrayBuffer.empty[Long]) += b
+      adj.getOrElseUpdate(b, scala.collection.mutable
+        .ArrayBuffer.empty[Long]) += a
+      deg(a) = deg.getOrElse(a, 0L) + 1L
+      deg(b) = deg.getOrElse(b, 0L) + 1L
+    }
+    if (deg.isEmpty) Iterator.empty
+    else {
+      val hub = deg.toSeq.minBy { case (x, dg) => (-dg, x) }._1
+      val dist = scala.collection.mutable.HashMap(hub -> 0L)
+      var frontier = Seq(hub)
+      for (lvl <- 1L to 6L) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil))
+          .filter(y => !dist.contains(y)).distinct
+        frontier.foreach(y => dist(y) = lvl)
+      }
+      dist.iterator
+    }
+  }
+
   /** scale used to quantize log terms — see determinism notes above */
   private val EntScale = 1e4
 
@@ -618,51 +649,16 @@ object AnalyticsOps extends QueryModule {
       // AND again per consumer leg — the exact multi-leg re-evaluation
       // the r15 round fixed elsewhere with localCheckpoint (r15 ADVICE)
       val e = copurchaseEdges(s, d).localCheckpoint(true)
-      // size-gated exact local solve (the GraphOps/CC pattern): the
+      // size-gated exact local solve (LocalSolve, the CC pattern): the
       // support-filtered co-purchase graph is a tiny residual at test
       // SF — 6 relax rounds of join+union+agg+checkpoint are pure job
-      // latency there. At or under the gate, one EXECUTOR-SIDE task
-      // (coalesce(1).mapPartitions — no driver collect, guide §5) runs
-      // the identical BFS (source = max-degree hub, ties min id; dist
-      // = min over ≤6 hops); above it the distributed frontier loop is
-      // the parts-scale path.
-      val bfsGate = s.conf
-        .getOption("spark.graft.bfs.localSolveMaxEdges").map(_.toLong)
-        .getOrElse(4000000L)
-      if (e.count() <= bfsGate) {
-        import s.implicits._
-        val out = e.select(col("a"), col("b")).as[(Long, Long)]
-          .coalesce(1)
-          .mapPartitions { it =>
-            val adj = scala.collection.mutable.HashMap
-              .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-            val deg = scala.collection.mutable.HashMap.empty[Long, Long]
-            it.foreach { case (a, b) =>
-              adj.getOrElseUpdate(a, scala.collection.mutable
-                .ArrayBuffer.empty[Long]) += b
-              adj.getOrElseUpdate(b, scala.collection.mutable
-                .ArrayBuffer.empty[Long]) += a
-              deg(a) = deg.getOrElse(a, 0L) + 1L
-              deg(b) = deg.getOrElse(b, 0L) + 1L
-            }
-            if (deg.isEmpty) Iterator.empty
-            else {
-              val hub = deg.toSeq.minBy { case (x, dg) => (-dg, x) }._1
-              val dist = scala.collection.mutable.HashMap(hub -> 0L)
-              var frontier = Seq(hub)
-              for (lvl <- 1L to 6L) {
-                frontier = frontier.flatMap(adj.getOrElse(_, Nil))
-                  .filter(y => !dist.contains(y)).distinct
-                frontier.foreach(y => dist(y) = lvl)
-              }
-              dist.iterator
-            }
-          }
-          .toDF("node", "dist")
-          .localCheckpoint(true)
-        e.unpersist()
-        out.orderBy("node")
-      } else {
+      // latency there. At or under the gate one executor task runs the
+      // identical BFS (source = max-degree hub, ties min id; dist = min
+      // over ≤6 hops); above it the distributed frontier loop is the
+      // parts-scale path.
+      import s.implicits._
+      val out = LocalSolve[(Long, Long), (Long, Long)]("graph_bfs", e,
+          "node", "dist")(bfsFromHub) { _ =>
         val n = e.select(col("a").as("x"), col("b").as("y"))
           .unionByName(e.select(col("b").as("x"), col("a").as("y")))
         // source = the max-degree hub (ties → min id): the
@@ -679,8 +675,10 @@ object AnalyticsOps extends QueryModule {
             .groupBy("node").agg(min("dist").as("dist"))
             .localCheckpoint()
         }
-        dist.orderBy("node")
+        dist
       }
+      e.unpersist()
+      out.orderBy("node")
     }),
 
     // Shannon entropy of the event-type mix per user bucket — the

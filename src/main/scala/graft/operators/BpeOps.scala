@@ -118,19 +118,18 @@ object BpeOps extends QueryModule {
     x.length < y.length
   }
 
-  /** Exact local BPE fit over a collected (word, cnt) vocabulary — the
-    * size-gated twin of the relational round chain (round 15, the
-    * GraphOps local-solve pattern). Heaps' law keeps the DISTINCT-word
-    * frame O(vocabulary): when it fits the gate, the 8 rounds run
-    * driver-side — the published sequential algorithm with the exact
-    * same semantics (frequency-weighted integer pair counts, max with
-    * (p1, p2) byte-lexicographic tiebreak, greedy left-to-right
-    * non-overlapping resegmentation) — instead of 8 × (window + count
-    * shuffle + two joins + checkpoint) of job latency. Above the gate
-    * (a 100 TB corpus's multi-million-word vocabulary) the relational
-    * chain runs unchanged. */
-  private def localFit(spark: org.apache.spark.sql.SparkSession,
-      rows: Array[(String, Long)]): (DataFrame, DataFrame) = {
+  /** Exact BPE fit over every (word, cnt) row of the distinct-word
+    * frame — the size-gated twin of the relational round chain, run in
+    * one task by [[LocalSolve]]. Heaps' law keeps that frame
+    * O(vocabulary): when it fits the gate, the 8 rounds run as the
+    * published sequential algorithm with the exact same semantics
+    * (frequency-weighted integer pair counts, max with (p1, p2)
+    * byte-lexicographic tiebreak, greedy left-to-right non-overlapping
+    * resegmentation) instead of 8 × (window + count shuffle + two joins
+    * + checkpoint) of job latency. Above the gate (a 100 TB corpus's
+    * multi-million-word vocabulary) the relational chain runs unchanged.
+    * Emits [[Tagged]] rows: merges and final pieces. */
+  private def localFit(rows: Iterator[(String, Long)]): Iterator[Tagged] = {
     var pieces: Array[(String, Long, Array[String])] = rows.map {
       // seed by CODEPOINT, not UTF-16 char: the relational pieces0 (and
       // the oracle) segment via substr/length, which count codepoints —
@@ -140,9 +139,9 @@ object BpeOps extends QueryModule {
       case (w, cnt) => (w, cnt,
         w.codePoints().toArray
           .map(cp => new String(Character.toChars(cp))) :+ "</w>")
-    }
+    }.toArray
     val merges = scala.collection.mutable
-      .ArrayBuffer.empty[(Long, String, String, Long)]
+      .ArrayBuffer.empty[(Int, String, String, Long)]
     for (r <- 1 to Rounds) {
       val pc = scala.collection.mutable.HashMap.empty[(String, String), Long]
       pieces.foreach { case (_, cnt, ps) =>
@@ -162,7 +161,7 @@ object BpeOps extends QueryModule {
                else sLess(k._2, bp._2)))))
             { bc = c; bp = k }
         }
-        merges += ((r.toLong, bp._1, bp._2, bc))
+        merges += ((r, bp._1, bp._2, bc))
         pieces = pieces.map { case (w, cnt, ps) =>
           val out = scala.collection.mutable.ArrayBuffer.empty[String]
           var i = 0
@@ -178,38 +177,49 @@ object BpeOps extends QueryModule {
       // a provable no-op (best EMPTY, left join NULL, is_m false) and
       // stays one for every later round — emit no merge row, keep pieces
     }
-    import spark.implicits._
-    val table = merges.toSeq.toDF("rnd", "p1", "p2", "pair_count")
-    val finalPieces = pieces.toSeq.flatMap { case (w, cnt, ps) =>
-      ps.iterator.zipWithIndex.map { case (p, i) => (w, cnt, i, p) }
-    }.toDF("w", "cnt", "pos", "piece")
-    (table, finalPieces)
+    merges.iterator.map { case (r, p1, p2, pc) =>
+      (0, null: String, pc, r, p1, p2)
+    } ++ pieces.iterator.flatMap { case (w, cnt, ps) =>
+      ps.iterator.zipWithIndex.map { case (p, i) =>
+        (1, w, cnt, i, p, null: String)
+      }
+    }
   }
 
-  /** run the training chain: (merge table frame, final pieces).
-    * Size-gated: vocabularies at or under
-    * `spark.graft.bpe.localFitMaxWords` fit the exact local fit above;
-    * larger ones run the unrolled relational rounds. */
+  /** One row of the training chain's single output frame: kind 0 is a
+    * merge (_, pair_count, rnd, p1, p2), kind 1 a final piece
+    * (w, cnt, pos, piece, _). */
+  private type Tagged = (Int, String, Long, Int, String, String)
+  private val TaggedCols = Seq("kind", "w", "n", "pos", "piece", "p2")
+
+  /** run the training chain: (merge table frame, final pieces), both
+    * read from one tagged frame. Size-gated by [[LocalSolve]] on the
+    * distinct-word count: the exact local fit above, or the unrolled
+    * relational rounds. */
   private[graft] def trainChain(docs: DataFrame): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
+    import spark.implicits._
     val words = wordCounts(docs).localCheckpoint()
-    val localMax = spark.conf
-      .getOption("spark.graft.bpe.localFitMaxWords").map(_.toLong)
-      .getOrElse(1000000L)
-    if (words.count() <= localMax) {
-      val rows = words.collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      return localFit(spark, rows)
+    val out = LocalSolve[(String, Long), Tagged]("trainChain", words,
+        TaggedCols: _*)(localFit) { _ =>
+      var pieces = pieces0(words).localCheckpoint()
+      val merges = (1 to Rounds).map { r =>
+        val (next, best) = bpeRound(pieces)
+        pieces = next.localCheckpoint()
+        best.withColumn("rnd", lit(r))
+      }
+      merges.reduce(_.unionAll(_))
+        .select(lit(0), lit(null).cast("string"), col("pc").cast("long"),
+          col("rnd"), col("p1"), col("p2"))
+        .unionAll(pieces.select(lit(1), col("w"), col("cnt"), col("pos"),
+          col("piece"), lit(null).cast("string")))
+        .toDF(TaggedCols: _*)
     }
-    var pieces = pieces0(words).localCheckpoint()
-    val merges = (1 to Rounds).map { r =>
-      val (next, best) = bpeRound(pieces)
-      pieces = next.localCheckpoint()
-      best.withColumn("rnd", lit(r.toLong))
-    }
-    val table = merges.reduce(_.unionAll(_))
-      .select(col("rnd"), col("p1"), col("p2"),
-        col("pc").cast("long").as("pair_count"))
+    val table = out.where(col("kind") === 0)
+      .select(col("pos").cast("long").as("rnd"), col("piece").as("p1"),
+        col("p2"), col("n").as("pair_count"))
+    val pieces = out.where(col("kind") === 1)
+      .select(col("w"), col("n").as("cnt"), col("pos"), col("piece"))
     (table, pieces)
   }
 

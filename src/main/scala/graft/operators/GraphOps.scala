@@ -5,11 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Distributed connected components for dup-cluster resolution.
   *
-  * Two regimes, gated on the MATERIALIZED edge count (round 15):
-  * a residual graph that fits one task (≤ [[LocalSolveMaxEdgesDefault]]
-  * directed rows) is solved exactly by a single-task union-find — one
-  * job instead of a multi-round fixpoint whose cost is almost pure
-  * job-scheduling latency at that size; anything larger runs the
+  * Two regimes, chosen by [[LocalSolve]] on the MATERIALIZED directed
+  * edge count: a residual graph that fits one task is solved exactly by
+  * a single-task union-find ([[unionFind]]); anything larger runs the
   * distributed fixpoint below, which is the only shape that survives
   * a 100 TB pair graph.
   *
@@ -110,80 +108,57 @@ object GraphOps {
       .agg(count(lit(1)).as("n_components"))
       .orderBy(col("n_members").desc)
 
-  /** Directed-row ceiling for the single-task exact solve (the doubled
-    * edge frame, so ÷2 for undirected pairs). The residual similarity
-    * graph after LSH banding + candidate capping is a tiny fraction of
-    * the corpus; when it fits ONE task — ≤8M directed rows is 128 MB of
-    * two long-arrays plus a 4 B/node union-find forest — an exact
-    * union-find pass in that task replaces the whole O(log diameter)
-    * relax/compress fixpoint: ~2 jobs instead of ~11 rounds × ~5 stages
-    * of pure job-scheduling latency (the measured r14 floor: 12-15 s per
-    * CC-fed query at sf0.1 for a graph of a few thousand edges). This is
-    * executor-side work, not a driver collect, and it is the same
-    * derive-from-materialized-size policy as `loopParts` below; above
-    * the ceiling the distributed fixpoint runs unchanged — the 100 TB
-    * path. Tunable per session (`spark.graft.cc.localSolveMaxEdges`);
-    * 0 disables the local path (used by the equivalence test to force
-    * the loop). */
-  private val LocalSolveMaxEdgesDefault = 8000000L
-
-  /** Single-task exact CC over a materialized doubled-edge frame that
-    * passed the size gate: sorted-id index + union-find with full path
+  /** Exact CC over every doubled edge (a, b), run in one task by
+    * [[LocalSolve]]: sorted-id index + union-find with full path
     * compression, roots united toward the SMALLER index, so every set's
     * root IS its min doc_id — bit-identical labels to the fixpoint by
-    * construction, independent of edge order. */
-  private def localSolve(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    edges.select(col("a"), col("b")).as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        // flat long buffers, not a tuple array: 16 B/row transient
-        var cap = 1 << 12
-        var size = 0
-        var as = new Array[Long](cap)
-        var bs = new Array[Long](cap)
-        while (it.hasNext) {
-          val e = it.next()
-          if (size == cap) {
-            cap *= 2
-            as = java.util.Arrays.copyOf(as, cap)
-            bs = java.util.Arrays.copyOf(bs, cap)
-          }
-          as(size) = e._1; bs(size) = e._2; size += 1
-        }
-        val all = new Array[Long](2 * size)
-        System.arraycopy(as, 0, all, 0, size)
-        System.arraycopy(bs, 0, all, size, size)
-        java.util.Arrays.sort(all)
-        // dedup in place → ids sorted ascending, index order = id order
-        var n = 0
-        var i = 0
-        while (i < 2 * size) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        val parent = Array.tabulate(n)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        i = 0
-        while (i < size) {
-          val ra = find(java.util.Arrays.binarySearch(ids, as(i)))
-          val rb = find(java.util.Arrays.binarySearch(ids, bs(i)))
-          if (ra != rb) {
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-          i += 1
-        }
-        Iterator.range(0, n).map(j => (ids(j), ids(find(j))))
+    * construction, independent of edge order. Emits (doc_id, rep). */
+  private def unionFind(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    // flat long buffers, not a tuple array: 16 B/row transient
+    var cap = 1 << 12
+    var size = 0
+    var as = new Array[Long](cap)
+    var bs = new Array[Long](cap)
+    while (it.hasNext) {
+      val e = it.next()
+      if (size == cap) {
+        cap *= 2
+        as = java.util.Arrays.copyOf(as, cap)
+        bs = java.util.Arrays.copyOf(bs, cap)
       }
-      .toDF("doc_id", "rep")
+      as(size) = e._1; bs(size) = e._2; size += 1
+    }
+    val all = new Array[Long](2 * size)
+    System.arraycopy(as, 0, all, 0, size)
+    System.arraycopy(bs, 0, all, size, size)
+    java.util.Arrays.sort(all)
+    // dedup in place → ids sorted ascending, index order = id order
+    var n = 0
+    var i = 0
+    while (i < 2 * size) {
+      if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    i = 0
+    while (i < size) {
+      val ra = find(java.util.Arrays.binarySearch(ids, as(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, bs(i)))
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+      i += 1
+    }
+    Iterator.range(0, n).map(j => (ids(j), ids(find(j))))
   }
 
   /** @param nodes single column `doc_id` — every node, including isolated
@@ -204,20 +179,24 @@ object GraphOps {
       .union(pairs.select(col("id2").as("a"), col("id1").as("b")))
       .localCheckpoint(true)
     val spark = outerEdges.sparkSession
-    val edgeCount = outerEdges.count()
-    val localMax = spark.conf.getOption("spark.graft.cc.localSolveMaxEdges")
-      .map(_.toLong).getOrElse(LocalSolveMaxEdgesDefault)
-    if (edgeCount <= localMax && edgeCount > 0) {
-      val labels = localSolve(outerEdges).localCheckpoint(true)
-      outerEdges.unpersist()
-      System.err.println(s"[graft] connectedComponents: solved exactly " +
-        s"in one task ($edgeCount directed edges <= $localMax)")
-      return nodes.select(col("doc_id"))
-        .join(labels.withColumnRenamed("doc_id", "pid"),
-          col("doc_id") === col("pid"), "left")
-        .select(col("doc_id"),
-          coalesce(col("rep"), col("doc_id")).as("rep"))
-    }
+    import spark.implicits._
+    val labels = LocalSolve[(Long, Long), (Long, Long)]("connectedComponents",
+        outerEdges, "doc_id", "rep")(unionFind)(
+        edgeCount => fixpoint(outerEdges, edgeCount, rounds))
+    outerEdges.unpersist() // the fixpoint releases it earlier; idempotent
+    nodes.select(col("doc_id"))
+      .join(labels.withColumnRenamed("doc_id", "pid"),
+        col("doc_id") === col("pid"), "left")
+      .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
+  }
+
+  /** The distributed relax/compress fixpoint over the materialized
+    * doubled-edge frame (`edgeCount` rows, already counted by the gate);
+    * returns (doc_id, rep) for every pair-participating node, bound to
+    * the caller's session. */
+  private def fixpoint(outerEdges: DataFrame, edgeCount: Long,
+      rounds: Int): DataFrame = {
+    val spark = outerEdges.sparkSession
     val outerParts = spark.conf.get("spark.sql.shuffle.partitions")
     val loopParts = math.max(1L, math.min(outerParts.toLong,
       edgeCount / 50000L + 1L))
@@ -275,9 +254,6 @@ object GraphOps {
       labels = stamped.select("doc_id", "rep")
     }
     edges.unpersist()
-    System.err.println(s"[graft] connectedComponents: " +
-      (if (converged) s"converged in $round rounds"
-       else s"NOT converged after $round rounds"))
     // an unconverged result must never silently materialize (it would be
     // persisted into write-once fixtures and reused downstream with no
     // signal — round-2 advisory); diameters beyond ~2^rounds fail fast
@@ -287,9 +263,6 @@ object GraphOps {
     // rebind the final labels back to the caller's session: a narrow
     // Row decode over the last checkpoint's materialized RDD (the
     // O(pair-participating nodes) keep-list), recomputed per consumer job
-    nodes.select(col("doc_id"))
-      .join(rebind(labels, spark).withColumnRenamed("doc_id", "pid"),
-        col("doc_id") === col("pid"), "left")
-      .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
+    rebind(labels, spark)
   }
 }

@@ -95,109 +95,112 @@ object VectorOps extends QueryModule {
         .select(col("q_id"), col("c1"), col("c2"),
           dot(col("e1"), col("e2")).as("cs"))
         .localCheckpoint()
-      // Size-gated exact greedy (round 15, the GraphOps local-solve
-      // pattern): the pool is O(queries · poolSize) BY CONSTRUCTION and
-      // both frames are already materialized with every double (qs, cs)
-      // computed by the same codegen dot the relational steps would
-      // read, so when the pool fits the gate the k-step argmax loop runs
-      // driver-side over those exact doubles — λ·qs − λC·max(cs) with
-      // identical IEEE arithmetic, ties on vec_id — instead of paying
-      // k × (2 joins + window + checkpoint) of job latency. Above the
-      // gate (a million-query batch rerank) the unrolled relational
-      // chain below runs unchanged.
-      val localMaxPool = e.sparkSession.conf
-        .getOption("spark.graft.mmr.localSolveMaxPool").map(_.toLong)
-        .getOrElse(50000L)
-      // gate on the COLLECTED volume, not pool rows alone: the pairs
-      // frame is O(pool_rows × poolSize), so a parametric caller passing
-      // a large poolSize could pass a rows-only gate while pairs holds
-      // hundreds of millions of entries (r15 ADVICE). The budget is
-      // expressed in default-shape units — localSolveMaxPool rows at the
-      // default pool of MmrPool — so default callers see the identical
-      // gate while wide-pool callers are bounded by what is actually
-      // pulled to the driver.
-      val poolRows = pool.count()
-      if (poolRows * math.max(poolSize.toLong, 1L)
-          <= localMaxPool * MmrPool) {
-        val ps = pool.select(col("q_id"), col("vec_id"), col("qs"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        val sims = pairs.select(col("q_id"), col("c1"), col("c2"), col("cs"))
-          .collect()
-          .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)),
-            r.getDouble(3))).toMap
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        // Spark's window ordering treats NaN as GREATER than every other
-        // double (and all NaNs equal, −0.0 equal to 0.0); every local
-        // comparison must mirror that — a plain `>`/sortBy would order
-        // NaN (and the −1 sentinel below) differently from the
-        // relational regime (r15 ADVICE)
-        def scoreCmp(a: Double, b: Double): Int =
-          if (a.isNaN && b.isNaN) 0
-          else if (a.isNaN) 1
-          else if (b.isNaN) -1
-          else if (a > b) 1 else if (a < b) -1 else 0
-        ps.groupBy(_._1).toSeq.foreach { case (qid, cands) =>
-          // step 1 = max qs (NaN greatest), ties min vec_id (the rn=1 row)
-          val ordered = cands.sortWith { (x, y) =>
-            val c = scoreCmp(x._3, y._3)
-            if (c != 0) c > 0 else x._2 < y._2
+      // Size-gated exact greedy (LocalSolve): the pool is
+      // O(queries · poolSize) BY CONSTRUCTION and both frames are already
+      // materialized with every double (qs, cs) computed by the same
+      // codegen dot the relational steps read, so when pool plus pair
+      // rows fit the gate one task runs the k-step argmax loop over
+      // those exact doubles instead of paying k × (2 joins + window +
+      // checkpoint) of job latency. The gate counts both row kinds —
+      // pairs are O(pool rows × poolSize), so a wide-pool caller is
+      // bounded by what the task actually receives. Above the gate (a
+      // million-query batch rerank) the unrolled relational chain runs.
+      val tagged = pool.select(lit(0).as("tag"), col("q_id"),
+          col("vec_id").as("c1"), col("vec_id").as("c2"), col("qs").as("s"))
+        .union(pairs.select(lit(1), col("q_id"), col("c1"), col("c2"),
+          col("cs")))
+      import e.sparkSession.implicits._
+      LocalSolve[(Int, Long, Long, Long, Double), (Long, Long, Long)](
+          "mmrRerank", tagged, "q_id", "vec_id", "rank")(
+          mmrGreedy(k, lambda, lambdaC)) { _ =>
+        var selected = pool
+          .withColumn("rn", row_number().over(wq))
+          .where(col("rn") === 1)
+          .select(col("q_id"), col("vec_id"), lit(1L).as("rank"))
+          .localCheckpoint()
+        for (step <- 2 to k) {
+          val selKeys = selected.select(col("q_id"), col("vec_id"))
+          val ms = pairs
+            .join(selKeys.withColumnRenamed("vec_id", "c2"),
+              Seq("q_id", "c2"))
+            .groupBy("q_id", "c1").agg(max("cs").as("ms"))
+            .withColumnRenamed("c1", "vec_id")
+          val next = pool
+            .join(selKeys, Seq("q_id", "vec_id"), "left_anti")
+            .join(ms, Seq("q_id", "vec_id"))
+            .select(col("q_id"), col("vec_id"),
+              (lit(lambda) * col("qs") - lit(lambdaC) * col("ms"))
+                .as("score"))
+            .withColumn("rn", row_number().over(Window.partitionBy("q_id")
+              .orderBy(col("score").desc, col("vec_id"))))
+            .where(col("rn") === 1)
+            .select(col("q_id"), col("vec_id"),
+              lit(step.toLong).as("rank"))
+          selected = selected.unionByName(next).localCheckpoint()
+        }
+        selected
+      }
+  }
+
+  /** mmrRerank's exact single-task greedy, run by [[LocalSolve]] over one
+    * tagged union: tag 0 rows are pool candidates (q_id, vec_id, _, qs),
+    * tag 1 rows are pair scores (q_id, c1, c2, cs). Emits
+    * (q_id, vec_id, rank) pick-for-pick equal to the relational chain:
+    * λ·qs − λC·max(cs) with identical IEEE arithmetic, ties on vec_id. */
+  private def mmrGreedy(k: Int, lambda: Double, lambdaC: Double)(
+      it: Iterator[(Int, Long, Long, Long, Double)])
+      : Iterator[(Long, Long, Long)] = {
+    import scala.collection.mutable
+    val ps = mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    val sims = mutable.HashMap.empty[(Long, Long, Long), Double]
+    it.foreach { case (tag, q, c1, c2, s) =>
+      if (tag == 0) ps += ((q, c1, s)) else sims((q, c1, c2)) = s
+    }
+    val out = mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    // Spark's window ordering treats NaN as GREATER than every other
+    // double (and all NaNs equal, −0.0 equal to 0.0); every local
+    // comparison must mirror that — a plain `>`/sortBy would order
+    // NaN (and the −1 sentinel below) differently from the
+    // relational regime (r15 ADVICE)
+    def scoreCmp(a: Double, b: Double): Int =
+      if (a.isNaN && b.isNaN) 0
+      else if (a.isNaN) 1
+      else if (b.isNaN) -1
+      else if (a > b) 1 else if (a < b) -1 else 0
+    ps.groupBy(_._1).foreach { case (qid, cands) =>
+      // step 1 = max qs (NaN greatest), ties min vec_id (the rn=1 row)
+      val ordered = cands.sortWith { (x, y) =>
+        val c = scoreCmp(x._3, y._3)
+        if (c != 0) c > 0 else x._2 < y._2
+      }
+      var selectedIds = Vector(ordered.head._2)
+      out += ((qid, ordered.head._2, 1L))
+      var remaining = ordered.tail
+      var step = 2
+      while (step <= k && remaining.nonEmpty) {
+        var bestId = -1L
+        var bestScore = Double.NegativeInfinity
+        remaining.foreach { case (_, cid, qs) =>
+          var ms = Double.NegativeInfinity
+          selectedIds.foreach { sid =>
+            // scoreCmp also mirrors the relational max("cs"):
+            // Spark's max puts NaN above every other double
+            val cs = sims((qid, cid, sid))
+            if (scoreCmp(cs, ms) > 0) ms = cs
           }
-          var selectedIds = Vector(ordered.head._2)
-          out += ((qid, ordered.head._2, 1L))
-          var remaining = ordered.tail
-          var step = 2
-          while (step <= k && remaining.nonEmpty) {
-            var bestId = -1L
-            var bestScore = Double.NegativeInfinity
-            remaining.foreach { case (_, cid, qs) =>
-              var ms = Double.NegativeInfinity
-              selectedIds.foreach { sid =>
-                // scoreCmp also mirrors the relational max("cs"):
-                // Spark's max puts NaN above every other double
-                val cs = sims((qid, cid, sid))
-                if (scoreCmp(cs, ms) > 0) ms = cs
-              }
-              val score = lambda * qs - lambdaC * ms
-              val c = if (bestId == -1L) 1 else scoreCmp(score, bestScore)
-              if (c > 0 || (c == 0 && cid < bestId)) {
-                bestScore = score; bestId = cid
-              }
-            }
-            out += ((qid, bestId, step.toLong))
-            selectedIds :+= bestId
-            remaining = remaining.filter(_._2 != bestId)
-            step += 1
+          val score = lambda * qs - lambdaC * ms
+          val c = if (bestId == -1L) 1 else scoreCmp(score, bestScore)
+          if (c > 0 || (c == 0 && cid < bestId)) {
+            bestScore = score; bestId = cid
           }
         }
-        import e.sparkSession.implicits._
-        return out.toSeq.toDF("q_id", "vec_id", "rank")
+        out += ((qid, bestId, step.toLong))
+        selectedIds :+= bestId
+        remaining = remaining.filter(_._2 != bestId)
+        step += 1
       }
-      var selected = pool
-        .withColumn("rn", row_number().over(wq))
-        .where(col("rn") === 1)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("rank"))
-        .localCheckpoint()
-      for (step <- 2 to k) {
-        val selKeys = selected.select(col("q_id"), col("vec_id"))
-        val ms = pairs
-          .join(selKeys.withColumnRenamed("vec_id", "c2"),
-            Seq("q_id", "c2"))
-          .groupBy("q_id", "c1").agg(max("cs").as("ms"))
-          .withColumnRenamed("c1", "vec_id")
-        val next = pool
-          .join(selKeys, Seq("q_id", "vec_id"), "left_anti")
-          .join(ms, Seq("q_id", "vec_id"))
-          .select(col("q_id"), col("vec_id"),
-            (lit(lambda) * col("qs") - lit(lambdaC) * col("ms"))
-              .as("score"))
-          .withColumn("rn", row_number().over(Window.partitionBy("q_id")
-            .orderBy(col("score").desc, col("vec_id"))))
-          .where(col("rn") === 1)
-          .select(col("q_id"), col("vec_id"),
-            lit(step.toLong).as("rank"))
-        selected = selected.unionByName(next).localCheckpoint()
-      }
-      selected
+    }
+    out.iterator
   }
 
   /** vec_mmr_rerank shape: candidate pool size and picks per query. */

@@ -1,11 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** §2.15 analytics operators: quantitative invariants beyond the DuckDB
   * hash oracle (which already pins exact values at sf0.01). */
-class AnalyticsSpec extends AnyFunSuite {
+class AnalyticsSpec extends LocalSolveRegimes {
   import TestSpark._
   import spark.implicits._
 
@@ -16,20 +15,6 @@ class AnalyticsSpec extends AnyFunSuite {
       val c = r.getAs[Double]("corr_qty_price")
       assert(!c.isNaN && math.abs(c) <= 1.0, s"corr out of range: $c")
     }
-  }
-
-  test("graph_bfs size-gated local solve and frontier loop agree") {
-    // round-15 gate: small graphs BFS driver-side; pin the two regimes
-    // node-for-node and dist-for-dist on the real corpus graph
-    def run(): Map[Long, Long] =
-      SparkEntry.queries("graph_bfs")(spark, sf).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = run()
-    spark.conf.set("spark.graft.bfs.localSolveMaxEdges", "0")
-    val dist = try run()
-      finally spark.conf.unset("spark.graft.bfs.localSolveMaxEdges")
-    assert(local == dist, s"gated regimes disagree: $local vs $dist")
-    assert(local.values.min == 0L && local.values.max <= 6L)
   }
 
   test("agg_entropy bounded by log2(n_types) and nonnegative") {

@@ -2,11 +2,10 @@ package graft
 
 import graft.api.GraftApi
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The reusable surface (graft.api.GraftApi) exercised on ad-hoc frames —
   * NOT the driver fixtures — proving the operators are corpus-agnostic. */
-class ApiSpec extends AnyFunSuite {
+class ApiSpec extends LocalSolveRegimes {
   import TestSpark._
   import spark.implicits._
 
@@ -15,6 +14,11 @@ class ApiSpec extends AnyFunSuite {
       .toDF("t").select(GraftApi.normalizeText(col("t")).as("n"))
       .collect().map(_.getString(0)).distinct
     assert(got.length == 1 && got.head == "creme brulee")
+    // a combining accent after the last space: the trim runs AFTER the
+    // accent strip, as on the query path (TextOps.normText)
+    val tail = Seq("a \u0301").toDF("t")
+      .select(GraftApi.normalizeText(col("t"))).as[String].collect().toSeq
+    assert(tail == Seq("a"), tail)
   }
 
   test("canonicalUrl folds every spelling class to one canonical form") {
@@ -274,55 +278,6 @@ class ApiSpec extends AnyFunSuite {
     assert(got(2L) == 12L,
       s"rank 2 must be the diverse vector, not the redundant twin: $got")
     assert(got(3L) == 11L, s"redundant twin comes last: $got")
-  }
-
-  test("mmrRerank size-gated local greedy and relational chain agree") {
-    // the round-15 gate: pools under the budget run the exact greedy
-    // driver-side over the same materialized doubles; this pins the two
-    // regimes pick-for-pick on a multi-query pool with redundancy
-    def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
-    val corpus = Seq(
-      (10L, v(0.99, 0, 0, 0)), (11L, v(0.98, 0.01, 0, 0)),
-      (12L, v(0, 1.0, 0, 0)), (13L, v(0.5, 0.5, 0.1, 0)),
-      (14L, v(0, 0, 1.0, 0)), (15L, v(0.1, 0, 0.9, 0.2))
-    ).toDF("vec_id", "embedding")
-    val queries = Seq((1L, v(0.8, 0.6, 0, 0)), (2L, v(0, 0.2, 0.98, 0)))
-      .toDF("q_id", "q_emb")
-    def run(): Map[(Long, Long), Long] =
-      GraftApi.mmrRerank(corpus, queries).collect()
-        .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank")) ->
-          r.getAs[Long]("vec_id")).toMap
-    val local = run()
-    spark.conf.set("spark.graft.mmr.localSolveMaxPool", "0")
-    val relational = try run()
-      finally spark.conf.unset("spark.graft.mmr.localSolveMaxPool")
-    assert(local == relational,
-      s"gated regimes disagree: $local vs $relational")
-    assert(local.keySet.map(_._1) == Set(1L, 2L))
-  }
-
-  test("mmrRerank regimes agree on NaN-scored candidates") {
-    // r16 (r15 ADVICE): NaN embeddings propagate NaN through every dot;
-    // Spark's window ordering ranks NaN as the GREATEST double, so the
-    // local greedy must too — a plain `>` loop would skip NaN scores,
-    // keep its −1 sentinel, and emit a bogus (q_id, −1, rank) row
-    def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
-    val corpus = Seq(
-      (10L, v(0.9, 0.1, 0, 0)), (11L, v(Double.NaN, 0, 0, 0)),
-      (12L, v(0, 1.0, 0, 0)), (13L, v(0.4, 0.4, 0.2, 0))
-    ).toDF("vec_id", "embedding")
-    val queries = Seq((1L, v(0.7, 0.7, 0, 0))).toDF("q_id", "q_emb")
-    def run(): Vector[(Long, Long, Long)] =
-      GraftApi.mmrRerank(corpus, queries).collect()
-        .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank"),
-          r.getAs[Long]("vec_id"))).sorted.toVector
-    val local = run()
-    spark.conf.set("spark.graft.mmr.localSolveMaxPool", "0")
-    val relational = try run()
-      finally spark.conf.unset("spark.graft.mmr.localSolveMaxPool")
-    assert(local == relational,
-      s"NaN regimes disagree: $local vs $relational")
-    assert(!local.exists(_._3 == -1L), s"sentinel id leaked: $local")
   }
 
   test("subwordTokens splits, marks continuations, and UNKs out-of-vocab") {

@@ -1,14 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import scala.collection.mutable
 
 /** Brute-force model parity for the BPE trainer (Sennrich et al. 2016):
   * an independent dict-based implementation of merge learning + greedy
   * non-overlapping re-segmentation, replayed against the relational
   * chain. */
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends LocalSolveRegimes {
   import TestSpark._
   import spark.implicits._
 
@@ -106,58 +104,5 @@ class BpeSpec extends AnyFunSuite {
     assert(fin2.count() == 1L,
       "exhausted rounds must leave the final single piece intact")
     assert(fin2.select("piece").as[String].collect().head == "ab</w>")
-  }
-
-  test("trainChain size-gated local fit and relational rounds agree") {
-    // round-15 gate: small vocabularies fit the exact driver-side BPE;
-    // this pins the two regimes merge-for-merge and piece-for-piece,
-    // including a tie round (both "th" and "e&" patterns collide) and
-    // an identical-symbol run
-    val docs = Seq((1L, "the cat sat aaaa"), (2L, "the cat the"),
-      (3L, "sat aaaa zz")).toDF("doc_id", "text")
-    def collectBoth(t: org.apache.spark.sql.DataFrame,
-        f: org.apache.spark.sql.DataFrame) = (
-      t.collect().map(r => (r.getLong(0), r.getString(1),
-        r.getString(2), r.getLong(3))).sortBy(_._1).toVector,
-      f.collect().map(r => (r.getString(0), r.getLong(1),
-        r.getInt(2), r.getString(3))).sorted.toVector,
-      t.dtypes.toVector, f.dtypes.toVector)
-    val (t1, f1) = operators.BpeOps.trainChain(docs)
-    val local = collectBoth(t1, f1)
-    spark.conf.set("spark.graft.bpe.localFitMaxWords", "0")
-    val relational = try {
-      val (t2, f2) = operators.BpeOps.trainChain(docs)
-      collectBoth(t2, f2)
-    } finally spark.conf.unset("spark.graft.bpe.localFitMaxWords")
-    assert(local == relational, s"gated regimes disagree:\n$local\nvs\n$relational")
-  }
-
-  test("gated local fit segments non-BMP text by codepoint like the chain") {
-    // r16 (r15 ADVICE): the relational pieces0 segments via substr/length,
-    // which count CODEPOINTS; a UTF-16 char split would shear
-    // supplementary-plane characters (emoji) into lone surrogates and
-    // diverge the regimes' pair counts. 😀 = U+1F600 (two chars, one
-    // codepoint); the repeated 😀x bigram forces a merge through it.
-    val docs = Seq((1L, "😀x😀x a"), (2L, "😀x b"), (3L, "a b"))
-      .toDF("doc_id", "text")
-    def collectBoth(t: org.apache.spark.sql.DataFrame,
-        f: org.apache.spark.sql.DataFrame) = (
-      t.collect().map(r => (r.getLong(0), r.getString(1),
-        r.getString(2), r.getLong(3))).sortBy(_._1).toVector,
-      f.collect().map(r => (r.getString(0), r.getLong(1),
-        r.getInt(2), r.getString(3))).sorted.toVector)
-    val (t1, f1) = operators.BpeOps.trainChain(docs)
-    val local = collectBoth(t1, f1)
-    spark.conf.set("spark.graft.bpe.localFitMaxWords", "0")
-    val relational = try {
-      val (t2, f2) = operators.BpeOps.trainChain(docs)
-      collectBoth(t2, f2)
-    } finally spark.conf.unset("spark.graft.bpe.localFitMaxWords")
-    assert(local == relational,
-      s"non-BMP regimes disagree:\n$local\nvs\n$relational")
-    // and no piece may be a lone surrogate
-    val pieces = f1.select("piece").collect().map(_.getString(0))
-    assert(!pieces.exists(p => p.length == 1 && p.charAt(0).isSurrogate),
-      s"lone surrogate piece leaked: ${pieces.mkString(",")}")
   }
 }

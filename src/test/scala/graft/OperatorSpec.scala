@@ -3,12 +3,11 @@ package graft
 import graft.functions.WeightedAvg
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
 /** Hand-computed expected values on tiny in-memory frames (SURVEY §5.2.2). */
-class OperatorSpec extends AnyFunSuite {
+class OperatorSpec extends LocalSolveRegimes {
   import TestSpark._
   import spark.implicits._
 
@@ -282,45 +281,22 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("connectedComponents refuses to return an unconverged labeling") {
-    // a 12-hop path cannot converge in one relax+compress round; the
-    // round-2 advisory: an unconverged labeling must fail fast, never
-    // silently materialize into a fixture. The size gate would solve
-    // this tiny graph exactly in one task, so force the distributed
-    // fixpoint for the refusal pin.
+    // a 12-hop path cannot converge in one relax+compress round; an
+    // unconverged labeling must fail fast, never silently materialize
+    // into a fixture. The one-task solve needs no rounds, so force the
+    // distributed fixpoint for the refusal pin.
     val nodes = (0L to 12L).toDF("doc_id")
     val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("id1", "id2")
-    spark.conf.set("spark.graft.cc.localSolveMaxEdges", "0")
-    try {
+    LocalSolveSpec.withBound(0L) {
       assertThrows[IllegalArgumentException] {
         operators.GraphOps.connectedComponents(nodes, pairs, rounds = 1)
       }
-      // and with the default budget the same graph converges exactly
-      val labels = operators.GraphOps.connectedComponents(nodes, pairs)
-        .collect()
-      assert(labels.forall(_.getLong(1) == 0L), "path did not collapse to 0")
-    } finally spark.conf.unset("spark.graft.cc.localSolveMaxEdges")
+      // and with the default round budget the same graph converges
+      assert(LocalSolveSpec.ccLabels(nodes, pairs).values.forall(_ == 0L),
+        "path did not collapse to 0")
+    }
   }
 
-  test("connectedComponents single-task solve and distributed fixpoint " +
-      "produce identical labels (long chain + random cross-links)") {
-    // the round-15 size gate: below it an exact union-find runs in one
-    // task; this pins the two regimes label-for-label on a graph with a
-    // >16-hop chain (the fixpoint's hard case) plus arbitrary extras
-    val n = 40L
-    val nodes = (0L until n).toDF("doc_id")
-    val chain = (5L until 30L).map(i => (i, i + 1))
-    val extra = Seq((0L, 3L), (3L, 36L), (38L, 39L), (2L, 2L + 0L))
-    val pairs = (chain ++ extra).toDF("id1", "id2")
-    val local = operators.GraphOps.connectedComponents(nodes, pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    spark.conf.set("spark.graft.cc.localSolveMaxEdges", "0")
-    val dist =
-      try operators.GraphOps.connectedComponents(nodes, pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      finally spark.conf.unset("spark.graft.cc.localSolveMaxEdges")
-    assert(local == dist, "size-gated regimes disagree")
-    assert(local(29L) == 5L && local(36L) == 0L && local(4L) == 4L)
-  }
 
   test("join_skew_salted hot key produces matched, spread output") {
     // round-2 advisory: the hot ~70% previously routed to dead key 0 and
