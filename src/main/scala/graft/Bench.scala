@@ -12,145 +12,78 @@ object Bench {
   /** BASELINE.md's per-query warm prices for the known cost centers
     * (round-4 final + round-4c rows). Queries not listed here are
     * sub-second in every recorded run and get [[DefaultExpectedSec]].
-    * Keep in sync with BASELINE.md after perf changes. */
+    * Keep in sync with BASELINE.md after perf changes. What each price
+    * covers and where it was measured is in BASELINE.md. */
   private[graft] val ExpectedSec: Map[String, Double] = Map(
-    // round-11: the MV id runs 3 row-level DML commits over full
-    // orders plus a change-feed refresh (driver-side CDC diffs, the
-    // documented cost class — feed now cached so count+MERGE pay
-    // once); the view id spins the extension sibling session on
-    // first use and drives 3 actions through the stored view
     "mv_incremental" -> 3.0,
-    // round-12: 4 DML commits + the group-wise recompute MERGE
     "mv_groupwise" -> 2.5,
-    // 3 commits + DV delete + full restart replay from the log
     "table_log_replay" -> 2.0,
-    // two parquet seeds + task-side staging + the two-table commit
     "txn_multi_table" -> 1.5,
-    // round-14: fact+dim seeds + task-side DV bitmap pass + the
-    // two-table read-write commit
     "txn_multi_rw" -> 2.0,
-    // round-14: seed + two widens (each checkpoints) + wide append
     "sql_alter_widen" -> 1.5,
-    // round-15: fact+dim seeds + a transact landing after the pinned
-    // capture (warm 0.63 — priced like its txn siblings, the commit
-    // tax dominates under load)
     "txn_read_snapshot" -> 2.0,
-    // round-15: customer seed + eq-delete + purge-via-compact
-    // (warm 0.59)
     "sql_delete_eq" -> 1.5,
-    // round-15: 3 upsert epochs (eq-delete + append each) + the
-    // closing purge compaction — 7 commits
     "stream_upsert_eqdelete" -> 2.0,
-    // round-14: three range-sorted appends + the bin-pack merge
-    // (1.98 s in the close drive under mild ambient)
     "table_sort_order" -> 2.0,
     "sql_catalog_view" -> 2.0,
-    // 6 ingest commits + the merge pass itself; warm 1.4-1.6 s
     "table_binpack" -> 2.0,
-    // round-13 re-price (the r12 judge's ask): idle fixture-cold
-    // drives read 14.9 / 14.1 s — the CC pointer-jump job-scheduling
-    // floor — so the old 13.0/14.0 left a loaded run one ambient
-    // spike from a false 3× tripwire
     "dedup_embedding_scaled" -> 15.0,
     "dedup_embedding" -> 15.0,
-    // round-13 ids: REPLACE WHERE + the staged distributed diff read;
-    // seed + plant-orphan + sweep — both ~1 s warm
     "cdc_replace_feed" -> 1.5,
     "table_gc_orphans" -> 1.5,
     "dedup_clusters" -> 6.0,
-    "dedup_near" -> 1.0, // round-5: codegen kernels, 8.7 → 0.8 s
+    "dedup_near" -> 1.0,
     "join_bucketed" -> 5.0,
-    "join_cbo_reorder" -> 5.0, // one-time ANALYZE'd-table fixture write
+    "join_cbo_reorder" -> 5.0,
     "vec_quantize" -> 2.5,
-    "vec_kmeans" -> 1.5, // 3 broadcast-assign rounds, warm ×3 at sf0.1
+    "vec_kmeans" -> 1.5,
     "clean_boilerplate" -> 1.0,
     "dedup_ngram" -> 4.0,
     "dedup_containment" -> 2.5,
-    "dedup_substring" -> 1.5, // round-6: warm ×3 1.3-1.5 s at sf0.1
-    "text_winnow" -> 1.5, // round-7: warm ×2 1.5-1.7 s (4× window fan-out)
-    "profile_bootstrap_ci" -> 1.5, // round-7: warm 1.3-1.4 s (32× fan-out)
-    // round-7: the 8-round chain is local job latency (CC-fixpoint
-    // class), priced on whichever bpe query runs first (the per-dir
-    // memo makes the second ~free); generous static prices for both
+    "dedup_substring" -> 1.5,
+    "text_winnow" -> 1.5,
+    "profile_bootstrap_ci" -> 1.5,
     "text_bpe_apply" -> 8.0,
     "text_bpe_train" -> 6.0,
-    // round-6b: clean_substring / clean_repetition / pipeline_dedup_card
-    // measured sub-second warm (0.25/0.47/0.39 s, BASELINE round-6b) —
-    // per this map's contract they ride DefaultExpectedSec
-    "dedup_semantic" -> 2.0, // within-cell pair join at 8 cells; warm 1.75
-    // round-7b: runs the EXACT truth miner (dedup_ngram-class inverted
-    // index) + the minhash band chain; 3.1-3.4 s warm, ~7 s cold
+    "dedup_semantic" -> 2.0,
     "dedup_pair_eval" -> 4.0,
-    "validate_pk_fk" -> 1.5, // 7 FK edges: 3 fact-side anti-joins; warm 1.42
-    "vec_mmr_rerank" -> 3.0, // 10 checkpointed greedy steps; warm 2.6
-
+    "validate_pk_fk" -> 1.5,
+    "vec_mmr_rerank" -> 3.0,
     "sim_cosine_pairs" -> 3.0,
     "sim_lsh" -> 3.5,
     "sim_ivf_topk" -> 3.0,
-    "sim_ivfpq_topk" -> 2.5, // round-6: warm ×3 2.0-2.1 s (two model fits)
+    "sim_ivfpq_topk" -> 2.5,
     "graph_pagerank" -> 4.5,
     "graph_triangles" -> 3.0,
-    // round-7b: one-time copurchase-edge fixture write + wedge groupBy;
-    // 1.3 s fixture-cold / 0.7 s warm (the pre-fixture form recomputed
-    // the edge aggregation once per union branch: 7.1-7.3 s)
     "graph_jaccard" -> 2.0,
-    // round-7b: the raw co-purchase pair aggregation (triangles-class;
-    // no support fixture — the scoring needs sub-support pairs too);
-    // measured 3.1 s in-bench
     "agg_basket_lift" -> 3.0,
     "text_lm_score" -> 4.1,
     "agg_copurchase" -> 3.0,
     "text_approx_topk" -> 2.5,
     "sink_compacted" -> 2.5,
-    // round-13: the embedding keep-list fixture now builds from the
-    // LSH candidate feed + CC fixpoint (dedup_embedding's cost class)
-    // — 13.6 s fixture-cold, ~0.4-1.2 s warm; price the cold build in
-    // so a fresh-machine drive cannot false-tripwire a one-time cost
     "pipeline_multimodal_set" -> 6.0,
     "pipeline_curation" -> 2.5,
-    // round-8 (VERDICT r7 #3): every id measured >1 s in an idle sf0.1
-    // drive gets its own price so a moderately loaded run (~2×) cannot
-    // trip the 3× wire on a non-regression — the decontaminate-class
-    // false alarm both round-7 driver artifacts carried. Prices are the
-    // measured idle warm seconds rounded up to the next 0.5.
-    "profile_stats" -> 2.0, // 16-metric profile: 2 scans + approx sketch
-    "agg_attribution" -> 2.0, // per-user path windows over events
-    "dedup_exact_normalized" -> 2.0, // normalization chain before hash
-    "multimodal_phash" -> 2.0, // dHash band join on binary payloads
-    "sim_pq_topk" -> 2.0, // PQ codebook fit + ADC scan
-    "join_fuzzy" -> 1.5, // blocked Levenshtein (≤100-row blocks)
-    "text_cooccurrence" -> 1.5, // windowed token-pair explode
-    "graph_bfs" -> 1.5, // 6 relax rounds, localCheckpoint each
-    "sink_zorder" -> 1.5, // interleaved-bit sort + parquet write
-    "join_lateral" -> 1.5, // per-order top-2 lateral
-    "text_tfidf" -> 1.5, // two-level token agg + idf join
-    // round-9: carries the one-time refit k-means fit (the frozen fit
-    // is paid by sim_ivf_append, alphabetically earlier) + the 6-query
-    // exact-truth pass; 3.0 s fit-cold / ~1.0 s warm at sf0.1
+    "profile_stats" -> 2.0,
+    "agg_attribution" -> 2.0,
+    "dedup_exact_normalized" -> 2.0,
+    "multimodal_phash" -> 2.0,
+    "sim_pq_topk" -> 2.0,
+    "join_fuzzy" -> 1.5,
+    "text_cooccurrence" -> 1.5,
+    "graph_bfs" -> 1.5,
+    "sink_zorder" -> 1.5,
+    "join_lateral" -> 1.5,
+    "text_tfidf" -> 1.5,
     "sim_ivf_refit" -> 3.5,
-    // round-9: three INSERT commits seed the in-JVM governed table
-    // (20k purchase rows) before the windowed agg; measured ~1.2 s
     "stream_table_read" -> 2.0,
-    // round-9: seed + 3-clause MERGE through WriteDelta; 2.0 s cold
     "merge_into_mor" -> 1.5,
-    // round-9: seed + 3 native row-level commits + the versioned diff
     "cdc_table_changes" -> 1.5,
-    // round-9: seed + 3 commits + the change-feed scan; ~1.2 s cold
     "cdc_feed_scan" -> 1.5,
-    // round-9: seed + ALTER + wide insert + read-back; ~1.1 s cold
     "sql_alter_evolve" -> 1.5,
-    // round-9: seed + 3 commits + feed replay / signed-delta agg
     "cdc_apply_feed" -> 1.5,
     "cdc_incremental_agg" -> 1.5,
-    // round-9 third wave: seeds a 150k-row governed orders copy, then
-    // the DPP-filtered join; measured 1.03 s in-bench
     "join_runtime_prune" -> 1.5,
-    // round-9 third wave: two panel-window passes over the embeddings
-    // (exact top-1 + hamming top-10); 1.15-1.42 s warm, and it can be
-    // the alphabetically-first embeddings reader in a drive
     "rank_mrr" -> 2.0,
-    // round-10 continuation: two governed-table seeds + the SPJ join
-    // (1.9 s warm); clone + CoW delete on the parquet store (1.3 s)
     "join_hidden_spj" -> 2.0,
     "table_clone" -> 1.5)
   private[graft] val DefaultExpectedSec = 1.0

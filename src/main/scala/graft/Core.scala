@@ -20,6 +20,64 @@ import org.apache.spark.sql.types._
   */
 object Q { type Fn = (SparkSession, String) => DataFrame }
 
+/** Range-first terminal sort: `narrow(in).orderBy(keys)` with the range
+  * exchange moved below `narrow`. A global sort's RangePartitioner runs
+  * one sampling job over everything below the exchange and then its map
+  * stage runs the same chain again; over a one-row-group corpus table
+  * both are single-task stages. Here the sampler and the map stage read
+  * only `in`, and `narrow` runs once, after the exchange, in
+  * `spark.sql.shuffle.partitions` tasks (an explicit partition count,
+  * which AQE never coalesces). The result has `orderBy`'s global order —
+  * ascending, nulls first, ties in no fixed order — because `narrow`
+  * only projects, filters or generates rows within a partition and
+  * passes every key through as the same attribute. Both are checked
+  * here, on the analyzed plans, so a call that would lose the order is
+  * refused when the DataFrame is built; nothing is executed.
+  * `keys` are top-level column names of `in`. */
+object RangeFirst {
+  import org.apache.spark.sql.catalyst.expressions.{Attribute, SubqueryExpression}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project}
+  import org.apache.spark.sql.internal.SQLConf
+
+  def sorted(in: DataFrame, keys: String*)(
+      narrow: DataFrame => DataFrame): DataFrame = {
+    val parts = in.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val ranged = in.repartitionByRange(parts, keys.map(in.col): _*)
+    val base = ranged.queryExecution.analyzed
+    val out = narrow(ranged)
+    val top = out.queryExecution.analyzed
+
+    def perRow(p: LogicalPlan): Unit = if (p != base) {
+      val (kind, exprs, child) = p match {
+        case Project(list, c) => ("projection", list, c)
+        case Filter(cond, c) => ("filter", Seq(cond), c)
+        case g: Generate => ("generator", Seq(g.generator), g.child)
+        case other => throw new IllegalArgumentException(
+          s"RangeFirst.sorted: narrow may only project, filter or " +
+            s"generate per row, found ${other.nodeName}")
+      }
+      require(exprs.forall(_.deterministic),
+        s"RangeFirst.sorted: non-deterministic $kind in narrow")
+      // the optimizer rewrites subqueries into joins, which may shuffle
+      require(!exprs.exists(_.exists(_.isInstanceOf[SubqueryExpression])),
+        s"RangeFirst.sorted: subquery in narrow's $kind")
+      perRow(child)
+    }
+    perRow(top)
+
+    val resolver = SQLConf.get.resolver
+    keys.foreach { k =>
+      val given = base.resolveQuoted(k, resolver).collect {
+        case a: Attribute => a.exprId }
+      require(given.isDefined &&
+        top.resolveQuoted(k, resolver).map(_.exprId) == given,
+        s"RangeFirst.sorted: sort key $k must be a top-level column of " +
+          "in that narrow passes through unchanged")
+    }
+    out.sortWithinPartitions(keys.map(out.col): _*)
+  }
+}
+
 /** One module per operator family (SURVEY.md §2). SparkEntry merges them. */
 trait QueryModule {
   /** query-id -> query fn. Ids are the scoreboard identifiers — stable. */

@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev utility: time one named query and optionally dump its plan.
-  * Usage: runMain graft.RunOne <queryId> [sfDir] [explain]
+  * Usage: runMain graft.RunOne <queryId> [sfDir] [explain] [x3] [noop]
+  * `noop` times the fully materialized result (`write.format("noop")`)
+  * instead of a `count()`, which Catalyst may prune down to a scan.
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
@@ -24,8 +26,12 @@ object RunOne {
       if (args.contains("explain")) df.explain("formatted")
       for (_ <- 1 to reps) {
         val t0 = System.nanoTime()
-        val n = SparkEntry.queries(id)(spark, sfDir).count()
-        println(f"[runone] $id ${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n")
+        val q = SparkEntry.queries(id)(spark, sfDir)
+        val rows =
+          if (args.contains("noop")) {
+            q.write.format("noop").mode("overwrite").save(); "noop"
+          } else q.count().toString
+        println(f"[runone] $id ${(System.nanoTime() - t0) / 1e9}%.2fs rows=$rows")
       }
     }
     spark.stop()

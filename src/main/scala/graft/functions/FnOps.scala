@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Q, QueryModule, RangeFirst, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -33,25 +33,23 @@ object FnOps extends QueryModule {
     // parse a csv line against an inline schema — the embedded-csv
     // column surface (logs carrying csv payloads inside a field)
     "fn_csv" -> ((s, d) =>
-      Tables.events(s, d)
+      RangeFirst.sorted(Tables.events(s, d), "event_id")(_
         .select(col("event_id"),
           expr("to_csv(struct(event_id, user_id, event_type))").as("as_csv"),
           expr("from_csv(concat(event_id, ',', event_type)," +
-            " 'id BIGINT, t STRING').t").as("parsed_t"))
-        .orderBy("event_id")),
+            " 'id BIGINT, t STRING').t").as("parsed_t")))),
 
     // error-safe arithmetic/casts (ANSI-adjacent `try_*` surface): bad
     // rows become NULL instead of failing the job — the semantics a
     // 100 TB pipeline needs, where one malformed cell must never kill a
     // stage. Oracle mirrors with NULLIF-guarded division and TRY_CAST.
     "fn_try" -> ((s, d) =>
-      Tables.events(s, d)
+      RangeFirst.sorted(Tables.events(s, d), "event_id")(_
         .select(col("event_id"),
           expr("try_divide(value, user_id % 3)").as("div_guarded"),
           expr("try_cast(event_type AS INT)").as("cast_guarded"),
           expr("try_cast(get_json_object(props, '$.k') AS INT)")
-            .as("json_int"))
-        .orderBy("event_id")),
+            .as("json_int")))),
 
     // PII-style masking (governance surface): Spark's mask() defaults —
     // upper→'X', lower→'x', digit→'n', other chars kept — replicated in
@@ -189,15 +187,14 @@ object FnOps extends QueryModule {
       val payload = concat(lit("<ev><id>"), col("event_id"),
         lit("</id><type>"), col("event_type"), lit("</type><user>"),
         col("user_id"), lit("</user></ev>"))
-      Tables.events(s, d)
+      RangeFirst.sorted(Tables.events(s, d), "event_id")(_
         .select(col("event_id"), payload.as("xml"))
         .select(col("event_id"),
           expr("from_xml(xml, 'id BIGINT, type STRING, user BIGINT')")
             .as("p"),
           expr("xpath_long(xml, '/ev/user/text()')").as("xp_user"))
         .select(col("event_id"), col("p.type").as("etype"),
-          col("p.user").as("uid"), col("xp_user"))
-        .orderBy("event_id")
+          col("p.user").as("uid"), col("xp_user")))
     }),
 
     // VARIANT semi-structured type (Spark 4): parse once into the binary
@@ -206,14 +203,13 @@ object FnOps extends QueryModule {
     // parses). try_variant_get on an absent path yields NULL, not an
     // error — the tolerant read a drifting feed needs.
     "fn_variant" -> ((s, d) =>
-      Tables.events(s, d)
+      RangeFirst.sorted(Tables.events(s, d), "event_id")(_
         .select(col("event_id"),
           expr("variant_get(parse_json(props), '$.k', 'int')").as("k_int"),
           expr("try_variant_get(parse_json(props), '$.missing', 'string')")
             .as("missing_val"),
           (expr("variant_get(parse_json(props), '$.k', 'int')") * 2)
-            .as("k_doubled"))
-        .orderBy("event_id")),
+            .as("k_doubled")))),
 
     // binary↔text encodings: base64 and hex round trips (inputs kept
     // under 57 bytes — MIME base64 line-wraps at 76 chars and engines
@@ -256,13 +252,12 @@ object FnOps extends QueryModule {
     }),
 
     "fn_json" -> ((s, d) =>
-      Tables.events(s, d)
+      RangeFirst.sorted(Tables.events(s, d), "event_id")(_
         .select(
           col("event_id"),
           get_json_object(col("props"), "$.k").cast(IntegerType).as("k_val"),
           (get_json_object(col("props"), "$.k").cast(IntegerType) % 10)
-            .as("k_mod"))
-        .orderBy("event_id")),
+            .as("k_mod")))),
 
     // conditional family: greatest/least/nvl/nvl2/if across columns
     "fn_cond" -> ((s, d) =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Q, QueryModule, RangeFirst, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -186,6 +186,9 @@ object TextOps extends QueryModule {
       explode(slice(col("hs"), lit(1),
         (floor(lit(1.0 - ShingleTau) * size(col("hs"))) + 1)
           .cast(IntegerType))).as("tok"))
+    // spark.graft.shingle.maxDf here caps PREFIX df: the number of docs
+    // whose prefix slice holds the shingle, not every doc containing it
+    // (containmentPairs caps full df with the same knob)
     val pruned = prunePostings(prefix, "tok", "ngramCandidates")
     pruned.select(col("tok"), col("doc_id").as("id1"))
       .join(pruned.select(col("tok"), col("doc_id").as("id2")), Seq("tok"))
@@ -344,6 +347,8 @@ object TextOps extends QueryModule {
     // maxDf cap on the CONTAINER-side posting lists (the full index —
     // the side whose df drives the join's quadratic term); a dropped
     // tok matches nothing, so pruning one side prunes the pair space.
+    // spark.graft.shingle.maxDf here caps FULL df: every doc containing
+    // the shingle (ngramCandidates caps prefix df with the same knob).
     // prunePostings contract (no-op at tested scales, eager drop log).
     val allB = prunePostings(docs.select(col("doc_id").as("id_b"),
       explode(col("hs")).as("tok")), "tok", "containmentPairs")
@@ -1568,14 +1573,14 @@ object TextOps extends QueryModule {
     }),
 
     // rolling polynomial content fingerprint (mod large prime), computed
-    // character-by-character — single narrow pass, no shuffle
+    // character-by-character — one narrow pass, run once after the
+    // terminal sort's range exchange (RangeFirst), not before it twice
     "text_fingerprint" -> ((s, d) =>
-      Tables.documents(s, d)
+      RangeFirst.sorted(Tables.documents(s, d), "doc_id")(_
         .select(col("doc_id"),
           expr("aggregate(sequence(1, length(text)), 0L, " +
             "(acc, i) -> (acc * 31 + ascii(substr(text, i, 1))) % 1000000007)")
-            .as("fingerprint"))
-        .orderBy("doc_id")),
+            .as("fingerprint")))),
 
     // train/test decontamination — see decontamDetail for the shape
     "decontaminate" -> ((s, d) => decontamDetail(s, d).orderBy("doc_id")),

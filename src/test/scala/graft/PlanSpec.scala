@@ -42,6 +42,29 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), s"top-k not incremental:\n$p")
   }
 
+  // RangeFirst ids: the range exchange reads the bare scan, and the
+  // per-row parse or lambda (the marker) runs once, above it
+  for ((id, marker) <- Seq("fn_csv" -> "from_csv(", "fn_json" ->
+      "get_json_object(", "fn_try" -> "try_cast(", "fn_variant" ->
+      "parseJson(", "fn_xml" -> "from_xml(", "text_fingerprint" ->
+      "lambdafunction(")) {
+    test(s"$id parses after its one range exchange, with no global sort") {
+      val p = plan(id)
+      val lines = p.linesIterator.toVector
+      val exchanges = lines.indices.filter(i => lines(i).contains("Exchange"))
+      assert(exchanges.size == 1, s"expected one exchange:\n$p")
+      val parts = spark.conf.get("spark.sql.shuffle.partitions")
+      assert(lines(exchanges.head).matches(
+        s".*Exchange rangepartitioning\\(.*, $parts\\), REPARTITION_BY_NUM.*"),
+        s"expected a range exchange into $parts partitions:\n$p")
+      assert(!lines.exists(_.matches(".*Sort \\[.*\\], true.*")),
+        s"global sort left in the plan:\n$p")
+      val at = lines.indexWhere(_.contains(marker))
+      assert(at >= 0 && at < exchanges.head,
+        s"$marker is not above the exchange:\n$p")
+    }
+  }
+
   test("agg_hash partial-aggregates before the shuffle") {
     val p = plan("agg_hash")
     val aggs = p.linesIterator.count(_.contains("HashAggregate"))
